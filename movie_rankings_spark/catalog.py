@@ -53,11 +53,13 @@ _FANOUT_KEY = {
 }
 
 
-#: memoized scan-partition probes: (path, size, target) -> n_parts.
-#: A plan-shape fact, not data — probing costs a full analyze/plan
-#: cycle (df.rdd), which the r10 blanket fan-out paid on EVERY
-#: load_table call of every query.
-_SCAN_PARTS_CACHE: dict[tuple[str, int, int], int] = {}
+#: memoized scan-partition probes: (path, size, mtime_ns, target,
+#: maxPartitionBytes, openCostInBytes) -> n_parts. A plan-shape fact,
+#: not data — probing costs a full analyze/plan cycle (df.rdd), which
+#: the r10 blanket fan-out paid on EVERY load_table call of every
+#: query. A rewritten file, or a session with other split-size confs,
+#: probes again.
+_SCAN_PARTS_CACHE: dict[tuple[str, int, int, int, str, str], int] = {}
 
 
 def _fanout_small_scan(df: DataFrame, path: str, key: str | None) -> DataFrame:
@@ -92,13 +94,21 @@ def _fanout_small_scan(df: DataFrame, path: str, key: str | None) -> DataFrame:
     MRS_SCAN_FANOUT=0 disables every fan-out, =all restores the r10
     blanket behaviour (both are A/B knobs)."""
     try:
-        size = os.path.getsize(path)
-        if size < _FANOUT_MIN_BYTES:
-            return df
+        st = os.stat(path)
     except OSError:
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism
-    memo_key = (path, size, target)
+    if st.st_size < _FANOUT_MIN_BYTES:
+        return df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    memo_key = (
+        path,
+        st.st_size,
+        st.st_mtime_ns,
+        target,
+        spark.conf.get("spark.sql.files.maxPartitionBytes"),
+        spark.conf.get("spark.sql.files.openCostInBytes"),
+    )
     n_parts = _SCAN_PARTS_CACHE.get(memo_key)
     if n_parts is None:
         n_parts = df.rdd.getNumPartitions()

@@ -563,7 +563,11 @@ def sql_api_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_rankings_spark.catalog import register_views
 
     register_views(spark, sf_dir, fanout_tables=frozenset({"lineitem"}))
-    return spark.sql(_Q1_ORACLE)
+    df = spark.sql(_Q1_ORACLE)
+    # spark.sql has analyzed the plan, so it keeps the fan-out scan; the
+    # session is shared, so later SQL gets the plain view back
+    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    return df
 
 
 _BITMAP_ROLLUP_ORACLE = """

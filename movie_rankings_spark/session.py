@@ -4,6 +4,19 @@ Local-mode friendly but cluster-shaped: AQE enabled (runtime coalesce +
 skew-join handling), explicit shuffle partitioning (sized to cores, not
 the 200 default), Arrow enabled for every pandas boundary, UTC session
 timezone so timestamp semantics match the DuckDB oracle.
+
+Python workers: every session runs its Python tasks through the
+repo-root module ``pyspark_graft_worker`` (``spark.python.worker.module``).
+Before each task PySpark calls ``importlib.invalidate_caches()``
+(``pyspark/worker_util.py:144``), and on CPython 3.11 that makes every
+zipimporter re-read its whole archive: 16 re-reads of ``pyspark.zip``,
+about 0.25 CPU-s, per task of a reused worker. The module makes a reused
+worker re-read an archive only when the file changed. Its name must
+start with ``pyspark``, because ``pyspark/daemon.py`` ignores any other
+worker module. The repo root goes first on the workers' ``PYTHONPATH``
+(the executor environment ``spark.executorEnv.PYTHONPATH`` seeds), so
+they import the module and this package whatever the caller's working
+directory.
 """
 
 from __future__ import annotations
@@ -13,6 +26,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: the directory holding this package and the Python worker module
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_MODULE = "pyspark_graft_worker"
 
 
 def get_spark(
@@ -53,7 +70,19 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.worker.module", WORKER_MODULE)
     )
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    # Every Python function ships sc.environment to its workers. Spark
+    # seeds it from spark.executorEnv.* of every conf source, and the
+    # worker factory appends its own PYTHONPATH (with _ensure_protobuf's
+    # vendor path). Extend it after launch: setting the conf would replace
+    # a value set through spark-submit or spark-defaults.conf.
+    paths = sc.environment.get("PYTHONPATH", "").split(os.pathsep)
+    if REPO_ROOT not in paths:
+        sc.environment["PYTHONPATH"] = os.pathsep.join(
+            p for p in (REPO_ROOT, *paths) if p
+        )
     return spark

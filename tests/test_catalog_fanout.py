@@ -10,10 +10,12 @@ regression (either direction) is caught structurally.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
-from movie_rankings_spark.catalog import load_table
+from movie_rankings_spark.catalog import _SCAN_PARTS_CACHE, load_table
+from movie_rankings_spark.plans.relational_queries import sql_api_pricing_summary
 
 SF_DIR = "/root/testdata/sf0.001"
 #: big enough to clear _FANOUT_MIN_BYTES at sf0.001 (117 KB)
@@ -57,3 +59,51 @@ def test_fanout_skips_dimension_sized_files(spark):
     # region is 1.9 KB — under _FANOUT_MIN_BYTES even when opted in
     plan = _plan(load_table(spark, SF_DIR, "region", fanout=True))
     assert "REPARTITION_BY_NUM" not in plan
+
+
+def _scan_copy(tmp_path):
+    """A private copy of the fan-out table, so memo entries are this test's."""
+    path = tmp_path / f"{TABLE}.parquet"
+    shutil.copyfile(os.path.join(SF_DIR, f"{TABLE}.parquet"), path)
+    return str(tmp_path)
+
+
+def test_fanout_memo_tracks_split_size_confs(spark, tmp_path):
+    sf = _scan_copy(tmp_path)
+    assert "REPARTITION_BY_NUM" in _plan(load_table(spark, sf, TABLE, fanout=True))
+    # splits this small cut the file into twice as many partitions as
+    # cores, so the scan is wide enough without the exchange
+    cores = spark.sparkContext.defaultParallelism
+    split = str(os.path.getsize(os.path.join(sf, f"{TABLE}.parquet")) // (2 * cores))
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+        spark.conf.set("spark.sql.files.openCostInBytes", split)
+        plan = _plan(load_table(spark, sf, TABLE, fanout=True))
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    assert "REPARTITION_BY_NUM" not in plan
+
+
+def test_fanout_memo_reprobes_rewritten_file(spark, tmp_path):
+    sf = _scan_copy(tmp_path)
+    path = os.path.join(sf, f"{TABLE}.parquet")
+
+    def probes():
+        return {k for k in _SCAN_PARTS_CACHE if k[0] == path}
+
+    load_table(spark, sf, TABLE, fanout=True)
+    first = probes()
+    # same bytes, same size: only the mtime tells the rewrite apart
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    load_table(spark, sf, TABLE, fanout=True)
+    assert len(first) == 1 and len(probes()) == 2
+
+
+def test_sql_surface_leaves_plain_lineitem_view(spark):
+    df = sql_api_pricing_summary(spark, SF_DIR)
+    assert "REPARTITION_BY_NUM" in _plan(df)
+    assert df.count() > 0
+    later = spark.sql("SELECT count(*) FROM lineitem")
+    assert "REPARTITION" not in _plan(later)

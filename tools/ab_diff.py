@@ -13,6 +13,15 @@ import math
 import sys
 
 
+def geomean_speedup(a: dict[str, float], b: dict[str, float]) -> tuple[float, int]:
+    """Geomean of B/A over the queries both sides timed above zero, and
+    how many queries that is; ``(nan, 0)`` when there are none."""
+    pairs = [(a[q], b[q]) for q in set(a) & set(b) if a[q] > 0 and b[q] > 0]
+    if not pairs:
+        return math.nan, 0
+    return math.exp(sum(math.log(bv / av) for av, bv in pairs) / len(pairs)), len(pairs)
+
+
 def main() -> int:
     a_path, b_path = sys.argv[1], sys.argv[2]
     min_d = float(sys.argv[3]) if len(sys.argv) > 3 else 0.05
@@ -25,15 +34,13 @@ def main() -> int:
     for d, av, bv, q in rows:
         if abs(d) < min_d:
             continue
-        print(f"{q:40s} {av:8.3f} {bv:8.3f} {d:+8.3f} {bv / av:6.2f}")
+        ratio = f"{bv / av:6.2f}" if av > 0 else f"{'-':>6s}"
+        print(f"{q:40s} {av:8.3f} {bv:8.3f} {d:+8.3f} {ratio}")
     ta, tb = sum(a[q] for q in common), sum(b[q] for q in common)
-    geo = math.exp(
-        sum(math.log(b[q] / a[q]) for q in common if a[q] > 0 and b[q] > 0)
-        / len(common)
-    )
+    geo, n_geo = geomean_speedup(a, b)
     print(
         f"\ntotal A={ta:.1f}s B={tb:.1f}s (A-B {ta - tb:+.1f}s); "
-        f"geomean B/A speedup={geo:.3f}; n={len(common)}"
+        f"geomean B/A speedup={geo:.3f} over n={n_geo} of {len(common)} common"
     )
     return 0
 
